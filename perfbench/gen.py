@@ -98,7 +98,10 @@ def cached(cache_root: str, kind: str, seed: int, size: int, build):
 # ---------------------------------------------------------------------------
 
 #: median tokens per page and log-normal spread: about 20 blocks on the
-#: median page, several hundred at the clipped tail
+#: median page, several hundred at the clipped tail.  These are assumed
+#: values, not fitted to a crawl: they make a heavy tail of page sizes, which
+#: is the shape the extract workload needs, and no page corpus ships with
+#: the program to fit them to.
 PAGE_MEDIAN_TOKENS = 100
 PAGE_SIGMA = 1.1
 PAGE_MIN_TOKENS = 8
@@ -170,7 +173,10 @@ def html_blocks(html: bytes) -> int:
 # corpus: curate
 # ---------------------------------------------------------------------------
 
-#: shares of the corpus rows; the rest are unique documents
+#: shares of the corpus rows; the rest are unique documents.  Assumed
+#: values, not measured on a crawl: each stage of the funnel gets a share
+#: large enough to count and to check, and the near-duplicate chains give
+#: connected components multi-hop graphs to label.
 REFETCH_FRAC = 0.10
 EXACT_FRAC = 0.10
 CHAIN_FRAC = 0.20
@@ -197,6 +203,7 @@ def corpus_rows(seed: int, n: int):
     n_exact = int(n * EXACT_FRAC)
     n_chain = int(n * CHAIN_FRAC)
     n_fresh = n - n_refetch - n_exact  # rows with a URL of their own
+    # tokens per document: log-normal, median 80, clipped 20..600 (assumed)
     lengths = lognormal_quantiles(n_fresh, 80, 0.6, 20, 600, rng)
     texts = []
     chains = 0

@@ -213,6 +213,22 @@ def count_jobs(spark, group: str, fn):
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def job_seconds(spark, group: str) -> float:
+    """Seconds from submission to completion, summed over the finished
+    Spark jobs of job group ``group``."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    total = 0.0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        job = store.job(jid)
+        if job.submissionTime().isDefined() and job.completionTime().isDefined():
+            total += (job.completionTime().get().getTime()
+                      - job.submissionTime().get().getTime()) / 1e3
+    return total
+
+
 # ---------------------------------------------------------------------------
 # spans
 # ---------------------------------------------------------------------------

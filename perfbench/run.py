@@ -33,13 +33,13 @@ E2E = {
     "wall_s": "s",
     "docs_per_s": "doc/s",
     "cpu_s_per_kdoc": "s",
-    "peak_rss_mb": "MB",
 }
 
 #: per-layer metrics: name -> unit.  A layer a workload does not run
 #: reads 0 on that workload.
 PER_LAYER = {
     "setup.cold_s": "s",
+    "process.peak_rss_mb": "MB",
     "input.build_s": "s",
     "trace.overhead_s": "s",
     "spark.executor_cpu_s": "s",
@@ -63,8 +63,12 @@ PER_LAYER = {
     "plans.manifest.input_read_amplification": "ratio",
     "plans.manifest.bytes_written_per_input_byte": "ratio",
     "plans.manifest.resume_wall_s": "s",
+    "plans.curate.build_s": "s",
+    "plans.curate.build_jobs": "count",
+    "plans.curate.build_job_s": "s",
+    "plans.curate.collect_s": "s",
     "plans.curate.url_stage_s": "s",
-    "operators.dedup.exact_stage_s": "s",
+    "plans.curate.exact_stage_s": "s",
     "operators.dedup.minhash_lsh_pairs.build_s": "s",
     "operators.dedup.minhash_lsh_pairs.exec_s": "s",
     "operators.dedup.minhash_lsh_pairs.pairs_out": "count",
@@ -78,7 +82,6 @@ for _q, _layer in work.LAYOUT_QUERIES.items():
     PER_LAYER[f"{_layer}.{_q}.build_s"] = "s"
     PER_LAYER[f"{_layer}.{_q}.exec_s"] = "s"
 
-SETUPS = 3
 MAX_CORES = 4
 
 
@@ -100,8 +103,6 @@ def parse_args(argv=None):
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--size", type=int, default=None,
                     help="input size in docs (default: the workload's)")
-    ap.add_argument("--setups", type=int, default=SETUPS,
-                    help="session set-ups whose median is setup_s")
     return ap.parse_args(argv)
 
 
@@ -116,22 +117,17 @@ class Bench:
         self.tracer = probe.Tracer(run_id, enabled=False)
 
     def conf(self):
-        # The heap is committed and touched at start (-Xms = -Xmx, pre-touch):
-        # otherwise the JVM's RSS follows its heap-growth heuristics and
-        # peak_rss_mb swings by a quarter between identical runs.  The
-        # metric then moves with the Spark driver, the Python workers and the
-        # JVM's off-heap memory; heap pressure shows in spark.gc_s.
+        # the program's own session defaults (driver memory included), with
+        # Spark's files kept inside the cache directory
         return {
-            "spark.driver.memory": "2g",
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": os.path.join(self.cache, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(self.cache, "warehouse"),
-            "spark.driver.extraJavaOptions": "-Xms2g -XX:+AlwaysPreTouch",
         }
 
     def start(self):
-        """Start (or restart) the session and warm it up to running Python
-        workers through an Arrow UDF on every core."""
+        """Start the session and warm it up to running Python workers
+        through an Arrow UDF on every core."""
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
@@ -150,16 +146,13 @@ class Bench:
         if n != sum(range(1, 64 * self.cores + 1)):
             raise RuntimeError("warm-up UDF returned a wrong sum")
 
-    def stop(self):
-        if self.spark is not None:
-            self.spark.stop()
-            self.spark = None
-
     def shutdown(self):
         """Stop the session and the JVM and wait for it to exit."""
         from pyspark import SparkContext
 
-        self.stop()
+        if self.spark is not None:
+            self.spark.stop()
+            self.spark = None
         gw = SparkContext._gateway
         if gw is None:
             return
@@ -238,12 +231,9 @@ def main(argv=None) -> int:
     bench = Bench(cache, cores, args.seed, run_id)
     try:
         bench.start()
-        setups = [process_age()]
-        for _ in range(args.setups - 1):
-            bench.stop()
-            t0 = time.perf_counter()
-            bench.start()
-            setups.append(time.perf_counter() - t0)
+        # cold set-up: process start (interpreter, imports, JVM launch, py4j
+        # gateway) until an Arrow UDF has run on every core
+        setup_s = process_age()
 
         cls, build = work.WORKLOADS[args.workload]
         size = args.size or work.SIZES[args.workload]
@@ -257,22 +247,20 @@ def main(argv=None) -> int:
         wl = cls(bench, input_dir, meta)
         if args.trace:
             metrics = traced(bench, wl, args.seconds)
-            metrics["setup.cold_s"] = setups[0]
+            metrics["setup.cold_s"] = setup_s
             metrics["input.build_s"] = meta["cached_input_build_s"]
             units = PER_LAYER
         else:
             res = work.closed_loop(wl, args.seconds)
             metrics = {
-                "setup_s": statistics.median(setups),
+                "setup_s": setup_s,
                 "wall_s": statistics.median(res["wall_s"]),
                 "docs_per_s": statistics.median(res["docs_per_s"]),
-                "cpu_s_per_kdoc": res["cpu_s_per_kdoc"],
-                "peak_rss_mb": res["peak_rss_mb"],
+                "cpu_s_per_kdoc": statistics.median(res["cpu_s_per_kdoc"]),
             }
-            for k in ("wall_s", "docs_per_s"):
+            for k in ("wall_s", "docs_per_s", "cpu_s_per_kdoc"):
                 emit(f"# {k} {json.dumps(probe.summary(res[k]))}")
-            emit(f"# setup_s {json.dumps(probe.summary(setups))} "
-                 f"cold={setups[0]:.3f}")
+            emit(f"# peak_rss_mb {res['peak_rss_mb']:.1f}")
             units = E2E
         context["canary_docs_per_s_end"] = canary()
         context["loadavg_end"] = probe.loadavg()
@@ -304,23 +292,25 @@ def traced(bench, wl, seconds):
     run read 0."""
     tracer = bench.tracer
     counters = probe.SparkCounters(bench.spark)
-    work.timed_op(wl)  # warm-up
+    work.warm_up(wl)
     plain, traced_walls = [], []
     spark_tot = {}
-    t_end = time.perf_counter() + seconds
-    while time.perf_counter() < t_end or not plain:
-        tracer.enabled = False
-        plain.append(work.timed_op(wl)[0])
-        tracer.enabled = True
-        with tracer.span("op.traced"):
-            counters.mark()
-            traced_walls.append(work.timed_op(wl)[0])
-            for k, v in counters.read().items():
-                spark_tot[k] = spark_tot.get(k, 0.0) + v
+    with probe.RssSampler() as rss:
+        t_end = time.perf_counter() + seconds
+        while time.perf_counter() < t_end or not plain:
+            tracer.enabled = False
+            plain.append(work.timed_op(wl)[0])
+            tracer.enabled = True
+            with tracer.span("op.traced"):
+                counters.mark()
+                traced_walls.append(work.timed_op(wl)[0])
+                for k, v in counters.read().items():
+                    spark_tot[k] = spark_tot.get(k, 0.0) + v
     n = len(traced_walls)
     emit(f"# wall_s untraced {json.dumps(probe.summary(plain))}")
     emit(f"# wall_s traced {json.dumps(probe.summary(traced_walls))}")
     metrics = dict.fromkeys(PER_LAYER, 0.0)
+    metrics["process.peak_rss_mb"] = rss.peak / 1e6
     metrics["trace.overhead_s"] = (
         statistics.median(traced_walls) - statistics.median(plain))
     for k, v in spark_tot.items():

@@ -34,7 +34,7 @@ def run_bench(workload, trace, seed=3):
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", "1", "--trace", str(trace),
-         "--size", str(TINY[workload]), "--setups", "1"],
+         "--size", str(TINY[workload])],
         cwd=ROOT, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -85,7 +85,7 @@ def test_corrupted_extraction_output_counts_as_failed(monkeypatch, capsys):
 
     monkeypatch.setattr(extract, "extract_main_text", corrupted)
     rc = run.main(["--workload", "extract", "--seed", "3", "--seconds", "1",
-                   "--size", str(TINY["extract"]), "--setups", "1"])
+                   "--size", str(TINY["extract"])])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["correct"] is False

@@ -27,6 +27,7 @@ from perfbench.probe import (
     RssSampler,
     SparkCounters,
     count_jobs,
+    job_seconds,
     tree_usage,
 )
 
@@ -39,8 +40,12 @@ WHY = {
 LAYOUT_WHY = ("the layout-model queries: geometry, predicates, layout_ops, "
               "OCR aggregation and detect_lines, which run nowhere else")
 
+#: warm-up before any operation is measured: at least this many
+#: operations, taking at least this many seconds (checks not counted)
+WARMUP_OPS = 2
+WARMUP_S = 10
 #: inputs per workload, in docs (pages or corpus rows)
-SIZES = {"extract": 3_000, "curate": 1_000}
+SIZES = {"extract": 3_000, "curate": 4_000}
 #: lineitem rows of the layout tables (events and orders are smaller)
 LAYOUT_SIZE = 10_000
 #: manifest probe of the traced extract run: resume buckets, and how many
@@ -91,28 +96,67 @@ def timed_op(wl):
     return wall, cpu
 
 
+def warm_up(wl):
+    """WARMUP_OPS operations or more, until they have taken WARMUP_S.  The
+    JVM compiles the planner and executor paths over the first operations:
+    a curate operation takes about twice as long the first time as the
+    third, and an extract operation about three times, so measuring right
+    after a single warm-up operation would sample a slope."""
+    ops, spent = 0, 0.0
+    while ops < WARMUP_OPS or spent < WARMUP_S:
+        spent += timed_op(wl)[0]
+        ops += 1
+
+
 def closed_loop(wl, seconds: float):
-    """One warm-up operation, then operations for ``seconds``; returns the
-    end-to-end sample lists and the process-tree CPU and peak RSS."""
-    timed_op(wl)
-    walls = []
-    cpu = 0.0
+    """Warm-up, then operations for ``seconds``; returns the per-operation
+    samples of wall time, throughput and process-tree CPU, and the peak
+    process-tree RSS."""
+    warm_up(wl)
+    walls, cpus = [], []
     with RssSampler() as rss:
         t_end = time.perf_counter() + seconds
         while time.perf_counter() < t_end or not walls:
-            wall, op_cpu = timed_op(wl)
+            wall, cpu = timed_op(wl)
             walls.append(wall)
-            cpu += op_cpu
+            cpus.append(cpu)
     return {
         "wall_s": walls,
         "docs_per_s": [wl.docs / w for w in walls],
-        "cpu_s_per_kdoc": 1000 * cpu / (wl.docs * len(walls)),
+        "cpu_s_per_kdoc": [1000 * c / wl.docs for c in cpus],
         "peak_rss_mb": rss.peak / 1e6,
     }
 
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
+
+
+def plan_prefix(df, column: str):
+    """The sub-plan of ``df``'s analyzed plan that introduces ``column``, as
+    a DataFrame: from the root, follow the first child that outputs
+    ``column`` down to the lowest node that does.  It runs the program's own
+    stages up to that column and nothing after it."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def names(node):
+        attrs = node.output()
+        return {attrs.apply(i).name() for i in range(attrs.size())}
+
+    node = df._jdf.queryExecution().analyzed()
+    if column not in names(node):
+        raise KeyError(column)
+    while True:
+        kids = node.children()
+        below = [kids.apply(i) for i in range(kids.size())
+                 if column in names(kids.apply(i))]
+        if not below:
+            break
+        node = below[0]
+    session = df.sparkSession
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, node)
+    return DataFrame(jdf, session)
 
 
 def median_time(fn, reps: int):
@@ -442,46 +486,51 @@ class Curate(Workload):
                     and r["cluster_keep"] == (want == r["url"]))
 
     def layers(self):
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        from layout_parser_spark.operators.dedup import (
-            dedup_exact,
-            minhash_lsh_pairs,
-        )
+        from layout_parser_spark.operators.dedup import minhash_lsh_pairs
         from layout_parser_spark.operators.text_analysis import (
             hashed_linear_score,
         )
-        from layout_parser_spark.operators.webgraph import (
-            canonicalize_url,
-            connected_components,
-        )
+        from layout_parser_spark.operators.webgraph import connected_components
+        from layout_parser_spark.plans.curate import curate_corpus
 
         sp = self.spark
         out = {}
-        # stage 1 as curate_corpus runs it: canonical url, first fetch wins
-        d = self.corpus().withColumn(
-            "canonical_url", canonicalize_url(F.col("url")))
-        w = Window.partitionBy("canonical_url").orderBy(
-            F.col("warc_ts").asc_nulls_last(), F.col("url"))
-        url_stage = d.withColumn("url_keep", F.row_number().over(w) == 1)
-        with self.span("plans.curate.url_stage"):
-            out["plans.curate.url_stage_s"] = median_time(
-                lambda: noop(url_stage), 3)
-        survivors = url_stage.where("url_keep").select(
-            F.col("url").alias("doc_id"), F.col("extracted_text").alias("text"))
-        with self.span("operators.dedup.dedup_exact"):
-            out["operators.dedup.exact_stage_s"] = median_time(
-                lambda: noop(dedup_exact(survivors)), 3)
-        # the exact survivors, materialized so later stages time only
-        # themselves
-        exact = dedup_exact(survivors).select("keep_id")
-        docs = sp.createDataFrame(
-            self.corpus().join(
-                exact.withColumnRenamed("keep_id", "url"), "url"
-            ).select(F.col("url").alias("doc_id"),
-                     F.col("extracted_text").alias("text")).toPandas())
-        docs = docs.localCheckpoint(eager=True)
+        # one curate_corpus call split into plan build (which runs the
+        # clustering's Spark jobs) and the collect that executes the rest
+        with self.span("plans.curate.curate_corpus"):
+            t0 = time.perf_counter()
+            annotated, jobs = count_jobs(
+                sp, "perfbench-curate-build",
+                lambda: curate_corpus(self.corpus()))
+            out["plans.curate.build_s"] = time.perf_counter() - t0
+        out["plans.curate.build_jobs"] = jobs
+        out["plans.curate.build_job_s"] = job_seconds(
+            sp, "perfbench-curate-build")
+        with self.span("action.collect"):
+            t0 = time.perf_counter()
+            annotated.select(*self.COLS).toArrow()
+            out["plans.curate.collect_s"] = time.perf_counter() - t0
+        # nested noop-sink prefixes of curate_corpus's own plan: the scan,
+        # then the sub-plan that adds url_keep, then the one that adds
+        # exact_keep
+        url_stage = plan_prefix(annotated, "url_keep")
+        exact_stage = plan_prefix(annotated, "exact_keep")
+        t = {}
+        for name, df in (("scan", self.corpus()), ("url", url_stage),
+                         ("exact", exact_stage)):
+            with self.span(f"prefix.plans.curate.{name}"):
+                t[name] = median_time(lambda: noop(df), 3)
+        out["plans.curate.url_stage_s"] = t["url"] - t["scan"]
+        out["plans.curate.exact_stage_s"] = t["exact"] - t["url"]
+        # the exact-stage survivors, materialized so later stages time
+        # only themselves
+        survivors = exact_stage.where("exact_keep").select(
+            F.col("url").alias("doc_id"),
+            F.col("extracted_text").alias("text")).toPandas()
+        self.outcome.check(len(survivors) == self.truth["exact_keep"])
+        docs = sp.createDataFrame(survivors).localCheckpoint(eager=True)
         with self.span("operators.dedup.minhash_lsh_pairs"):
             t0 = time.perf_counter()
             pairs_df, jobs = count_jobs(
