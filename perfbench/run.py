@@ -35,8 +35,8 @@ E2E = {
     "cpu_s_per_kdoc": "s",
 }
 
-#: per-layer metrics: name -> unit.  A layer a workload does not run
-#: reads 0 on that workload.
+#: per-layer metrics of BENCHMARK.json: name -> unit.  A layer a workload
+#: does not run reads 0 on that workload.
 PER_LAYER = {
     "setup.cold_s": "s",
     "process.peak_rss_mb": "MB",
@@ -46,41 +46,12 @@ PER_LAYER = {
     "spark.gc_s": "s",
     "spark.shuffle_write_bytes": "B",
     "spark.spill_bytes": "B",
-    "sources.scan_s": "s",
-    "plans.segment.self_s": "s",
-    "plans.extract.keep_self_s": "s",
-    "plans.reading_order.self_s": "s",
-    "plans.segment.kernel_docs_per_cpu_s": "doc/s",
-    "plans.reading_order.kernel_us_per_block": "us",
     "udf.python_s": "s",
     "udf.bytes_to_python": "B",
     "udf.bytes_from_python": "B",
-    "plans.segment.blocks_out": "count",
-    "plans.extract.kept_block_frac": "ratio",
-    "plans.extract.kept_block_frac_base": "count",
-    "plans.manifest.bucket_commit_s": "s",
-    "plans.manifest.jobs": "count",
-    "plans.manifest.input_read_amplification": "ratio",
-    "plans.manifest.bytes_written_per_input_byte": "ratio",
-    "plans.manifest.resume_wall_s": "s",
-    "plans.curate.build_s": "s",
-    "plans.curate.build_jobs": "count",
-    "plans.curate.build_job_s": "s",
-    "plans.curate.collect_s": "s",
-    "plans.curate.url_stage_s": "s",
-    "plans.curate.exact_stage_s": "s",
-    "operators.dedup.minhash_lsh_pairs.build_s": "s",
-    "operators.dedup.minhash_lsh_pairs.exec_s": "s",
-    "operators.dedup.minhash_lsh_pairs.pairs_out": "count",
-    "operators.dedup.minhash_lsh_pairs.jobs_at_build": "count",
-    "operators.webgraph.connected_components.s": "s",
-    "operators.webgraph.connected_components.jobs": "count",
-    "operators.text_analysis.hashed_linear_score_s": "s",
-    "operators.grouping.detect_lines.jobs": "count",
 }
-for _q, _layer in work.LAYOUT_QUERIES.items():
-    PER_LAYER[f"{_layer}.{_q}.build_s"] = "s"
-    PER_LAYER[f"{_layer}.{_q}.exec_s"] = "s"
+for _w in work.BENCHMARK_WORKLOADS:
+    PER_LAYER.update(work.WORKLOADS[_w][0].LAYERS)
 
 MAX_CORES = 4
 
@@ -96,8 +67,7 @@ def process_age() -> float:
 
 def parse_args(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True,
-                    choices=["extract", "curate"])
+    ap.add_argument("--workload", required=True, choices=list(work.WORKLOADS))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -246,10 +216,10 @@ def main(argv=None) -> int:
 
         wl = cls(bench, input_dir, meta)
         if args.trace:
-            metrics = traced(bench, wl, args.seconds)
+            units = {**PER_LAYER, **cls.LAYERS}
+            metrics = traced(bench, wl, args.seconds, units)
             metrics["setup.cold_s"] = setup_s
             metrics["input.build_s"] = meta["cached_input_build_s"]
-            units = PER_LAYER
         else:
             res = work.closed_loop(wl, args.seconds)
             metrics = {
@@ -286,10 +256,10 @@ def main(argv=None) -> int:
     return 0
 
 
-def traced(bench, wl, seconds):
+def traced(bench, wl, seconds, units):
     """Untraced and traced operations in alternation, then the layer
-    probes.  Returns every per-layer metric; layers this workload does not
-    run read 0."""
+    probes.  Returns every metric of ``units``; layers this workload does
+    not run read 0."""
     tracer = bench.tracer
     counters = probe.SparkCounters(bench.spark)
     work.warm_up(wl)
@@ -309,7 +279,7 @@ def traced(bench, wl, seconds):
     n = len(traced_walls)
     emit(f"# wall_s untraced {json.dumps(probe.summary(plain))}")
     emit(f"# wall_s traced {json.dumps(probe.summary(traced_walls))}")
-    metrics = dict.fromkeys(PER_LAYER, 0.0)
+    metrics = dict.fromkeys(units, 0.0)
     metrics["process.peak_rss_mb"] = rss.peak / 1e6
     metrics["trace.overhead_s"] = (
         statistics.median(traced_walls) - statistics.median(plain))
@@ -317,7 +287,7 @@ def traced(bench, wl, seconds):
         metrics[k if k.startswith("udf.") else f"spark.{k}"] = v / n
     with tracer.span("layers"):
         metrics.update(wl.layers())
-    unknown = set(metrics) - set(PER_LAYER)
+    unknown = set(metrics) - set(units)
     if unknown:
         raise RuntimeError(f"unlisted per-layer metrics: {sorted(unknown)}")
     tracer.counts.update(metrics)

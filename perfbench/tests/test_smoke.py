@@ -13,6 +13,7 @@ import os
 import subprocess
 import sys
 
+import pandas as pd
 import pyarrow as pa
 import pytest
 
@@ -22,7 +23,7 @@ sys.path.insert(0, ROOT)
 
 from perfbench import run, work  # noqa: E402
 
-TINY = {"extract": 200, "curate": 300}
+TINY = {"extract": 200, "layout": 400, "curate": 300}
 
 
 def bench_json():
@@ -43,7 +44,8 @@ def run_bench(workload, trace, seed=3):
 
 def test_benchmark_json_lists_the_metrics_run_py_reports():
     b = bench_json()
-    assert [w["name"] for w in b["workloads"]] == list(work.WORKLOADS)
+    assert [w["name"] for w in b["workloads"]] == list(
+        work.BENCHMARK_WORKLOADS)
     assert {m["name"]: m["unit"] for m in b["end_to_end"]} == run.E2E
     assert {m["name"]: m["unit"] for m in b["per_layer"]} == run.PER_LAYER
 
@@ -55,9 +57,10 @@ def test_result_schema(workload, trace):
     assert set(res) == {"correct", "attempted", "failed", "metrics"}
     assert res["attempted"] >= 1
     assert res["correct"] is (res["failed"] == 0)
-    if workload == "extract":
+    if workload in work.BENCHMARK_WORKLOADS:
         assert res["failed"] == 0
-    want = run.PER_LAYER if trace else run.E2E
+    layers = {**run.PER_LAYER, **work.WORKLOADS[workload][0].LAYERS}
+    want = layers if trace else run.E2E
     assert {k: v["unit"] for k, v in res["metrics"].items()} == want
     for k, v in res["metrics"].items():
         assert isinstance(v["value"], float), k
@@ -110,6 +113,17 @@ def test_wrong_cluster_id_counts_as_failed():
              "cluster_keep": 3, "quality_keep": 3, "keep": 3}
     wl.check((pa.Table.from_pylist(rows), stats))
     assert (wl.outcome.attempted, wl.outcome.failed) == (7, 1)
+
+
+def test_wrong_layout_result_counts_as_failed():
+    """Each layout query's result is compared with its oracle's; one wrong
+    value fails that query only."""
+    wl = work.Layout.__new__(work.Layout)
+    wl.outcome = work.Outcome()
+    good = pd.DataFrame({"k": [1, 2], "v": [0.5, float("nan")]})
+    wl.expected = {"a": work._normalize(good), "b": work._normalize(good)}
+    wl.check({"a": good.iloc[::-1], "b": good.assign(v=[0.5, 1.0])})
+    assert (wl.outcome.attempted, wl.outcome.failed) == (2, 1)
 
 
 def test_union_find_joins_a_chain_the_engine_mislabels():
